@@ -1,4 +1,5 @@
-"""Benchmark harness — prints ONE JSON line:
+"""Legacy benchmark harness — the repository's benchmark is
+``perfbench/run.py`` (workloads in ``BENCHMARK.json``).  Prints ONE JSON line:
 {"metric": ..., "value": <total sec>, "unit": "sec", "queries": {name: sec},
  "sf": ..., "turns_per_sec": ..., "extract_turns": ...}
 
@@ -119,12 +120,12 @@ def main() -> None:
     # two warmup drains: measured ramp on this box is pass0 5.2s → pass1
     # 3.2s → pass2 2.7s → floor ~2.5s (python-worker spin-up, JIT, page
     # cache) — one warmup still leaves ~25% ramp in the first timed pass
-    _run_noop(extract_transcripts(t_input, num_partitions=int(cpus) * 4))
-    _run_noop(extract_transcripts(t_input, num_partitions=int(cpus) * 4))
+    _run_noop(extract_transcripts(t_input))
+    _run_noop(extract_transcripts(t_input))
     extract_sec = None
     for _ in range(2):
         t0 = time.perf_counter()
-        _run_noop(extract_transcripts(t_input, num_partitions=int(cpus) * 4))
+        _run_noop(extract_transcripts(t_input))
         dt = time.perf_counter() - t0
         extract_sec = dt if extract_sec is None else min(extract_sec, dt)
     timings["extract_mixed"] = round(extract_sec, 3)

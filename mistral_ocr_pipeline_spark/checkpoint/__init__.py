@@ -1,6 +1,6 @@
 from mistral_ocr_pipeline_spark.checkpoint.lineage import (  # noqa: F401
     LINEAGE_SCHEMA,
-    committed_buckets,
+    committed_lineage,
     run_extraction,
     with_conv_bucket,
 )

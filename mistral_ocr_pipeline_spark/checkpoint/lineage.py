@@ -12,8 +12,9 @@ utils/utils.py:291-304, main.py:244-257) and the failures.jsonl sidecar
 Unit of work = ``conv_bucket = pmod(hash(conv_id), n_buckets)`` — a
 deterministic, data-independent partition of conversation space (the
 Iceberg ``bucket(N, conv_id)`` transform's moral equivalent).  A killed
-run resumes by anti-joining input buckets against committed lineage rows
-(J1 in SURVEY.md §2.4) and recomputes nothing that committed.
+run resumes by filtering the input to the buckets its one read of the
+committed lineage rows does not list (J1 in SURVEY.md §2.4) and
+recomputes nothing that committed.
 
 Commit protocol (write-audit-publish, SURVEY.md §7.4.6): a batch's data
 files AND its lineage rows are staged as unreferenced snapshots, the
@@ -57,6 +58,8 @@ LINEAGE_SCHEMA = T.StructType(
 )
 
 DEFAULT_N_BUCKETS = 16
+# rows of the staged output read back before publishing (the write audit)
+AUDIT_SAMPLE_ROWS = 100
 
 
 def with_conv_bucket(df: DataFrame, n_buckets: int = DEFAULT_N_BUCKETS) -> DataFrame:
@@ -65,17 +68,20 @@ def with_conv_bucket(df: DataFrame, n_buckets: int = DEFAULT_N_BUCKETS) -> DataF
     )
 
 
-def committed_buckets(catalog: TableCatalog, lineage_table: str) -> set[int]:
+def committed_lineage(
+    catalog: TableCatalog, lineage_table: str
+) -> dict[int, tuple[int, int]]:
+    """``{conv_bucket: (rows, failures)}`` of the committed lineage rows —
+    one read of the lineage table, at most ``n_buckets`` rows collected."""
     if not catalog.exists(lineage_table):
-        return set()
+        return {}
     rows = (
         catalog.read(lineage_table)
         .filter(F.col("status") == "committed")
-        .select("conv_bucket")
-        .distinct()
+        .select("conv_bucket", "rows", "failures")
         .collect()
     )
-    return {r.conv_bucket for r in rows}
+    return {r.conv_bucket: (r.rows, r.failures) for r in rows}
 
 
 def _drop_orphan_buckets(
@@ -112,44 +118,44 @@ def run_extraction(
     run_id: str = "run-0",
     n_buckets: int = DEFAULT_N_BUCKETS,
     only_buckets: set[int] | None = None,
-    num_partitions: int | None = None,
-    audit_sample: int = 100,
 ) -> dict:
     """One (possibly resumed) extraction run.
 
     ``only_buckets`` restricts the run to a subset — the test hook that
     simulates a kill after k bucket-batches committed.  Returns summary
-    metrics {processed_buckets, skipped_buckets, rows, failures}.
+    metrics {processed_buckets, skipped_buckets, orphans_dropped,
+    total_rows, total_failures}.
 
-    ``audit_sample``: rows of the just-published output to read back as a
-    write audit (0 disables).  The audit is SAMPLED because the lineage
-    metrics themselves no longer come from a read-back: rows/bytes/failures
-    per bucket are collected by ``DataFrame.observe`` DURING the write —
-    at 100 TB a full read-back would be a second complete scan of the
-    output per run (r01 design flaw)."""
-    committed = committed_buckets(catalog, lineage_table)
-    orphans = _drop_orphan_buckets(catalog, output_table, committed)
+    The committed lineage is read ONCE: its (bucket, rows, failures) rows
+    — one per bucket — decide on the driver which buckets are still to do
+    and seed the run's totals.  A run with nothing to do returns before
+    building any plan.  The new buckets' rows/bytes/failures are collected
+    by ``DataFrame.observe`` DURING the write — at 100 TB a read-back would
+    be a second complete scan of the output per run; only a sampled audit
+    of ``AUDIT_SAMPLE_ROWS`` staged rows is read back."""
+    committed = committed_lineage(catalog, lineage_table)
+    orphans = _drop_orphan_buckets(catalog, output_table, set(committed))
+    summary = {
+        "run_id": run_id,
+        "processed_buckets": 0,
+        "skipped_buckets": len(committed),
+        "orphans_dropped": orphans,
+        "total_rows": sum(rows for rows, _ in committed.values()),
+        "total_failures": sum(fails for _, fails in committed.values()),
+    }
+    # J1 resume: committed buckets drop out of the scan via one driver-side
+    # set difference (the reference's hash-index skip, utils.py:291-304)
+    wanted = range(n_buckets) if only_buckets is None else only_buckets
+    todo = sorted({int(b) for b in wanted} - committed.keys())
+    if not todo:
+        return summary
 
-    src = with_conv_bucket(input_df, n_buckets)
-    # J1 resume anti-join: committed buckets drop out of the scan.  The
-    # committed set is tiny (one row per bucket) → broadcast by Catalyst.
-    if committed:
-        lineage_keys = (
-            catalog.read(lineage_table)
-            .filter(F.col("status") == "committed")
-            .select("conv_bucket")
-            .distinct()
-        )
-        src = src.join(F.broadcast(lineage_keys), "conv_bucket", "left_anti")
-    if only_buckets is not None:
-        src = src.filter(F.col("conv_bucket").isin(*[int(b) for b in only_buckets]))
-
+    src = with_conv_bucket(input_df, n_buckets).filter(F.col("conv_bucket").isin(todo))
     # tz-AWARE instants: createDataFrame would interpret naive datetimes in
     # the Spark session timezone, shifting lineage times on non-UTC sessions
     started_at = datetime.now(timezone.utc)
     extracted = extract_transcripts(
-        src.select("conv_id", "turn_idx", "role", "text", "tool", "ts"),
-        num_partitions=num_partitions,
+        src.select("conv_id", "turn_idx", "role", "text", "tool", "ts")
     )
     out = with_conv_bucket(extracted, n_buckets)
 
@@ -191,44 +197,32 @@ def run_extraction(
         for b in range(n_buckets)
         if (vals[f"rows_{b}"] or 0) > 0
     ]
-    n_new = len(lineage_rows)
-    if n_new == 0:
+    if not lineage_rows:
         catalog.discard_staged(data_snap)
-    else:
-        if audit_sample > 0:
-            # sampled audit of the STAGED (not yet visible) snapshot:
-            # prove the files are readable with the expected schema before
-            # anything publishes — partition-pruned + LIMITed, a handful
-            # of rows, not a table scan
-            new_buckets = [r[2] for r in lineage_rows]
-            audited = (
-                spark.read.parquet(os.path.join(catalog.warehouse, data_snap))
-                .filter(F.col("conv_bucket").isin(new_buckets))
-                .select("conv_id", "turn_idx", "extracted_text", "error")
-                .limit(audit_sample)
-                .count()
-            )
-            if audited == 0:
-                catalog.discard_staged(data_snap)
-                raise RuntimeError(
-                    f"write audit failed: {n_new} buckets staged but the "
-                    f"staged output has no readable rows; nothing published"
-                )
-        lineage_snap = catalog.stage_append(
-            spark.createDataFrame(lineage_rows, LINEAGE_SCHEMA), lineage_table
-        )
-        catalog.commit({output_table: data_snap, lineage_table: lineage_snap})
-    lineage = catalog.read(lineage_table) if catalog.exists(lineage_table) else None
-    totals = (
-        lineage.agg(F.sum("rows").alias("r"), F.sum("failures").alias("f")).first()
-        if lineage is not None
-        else None
+        return summary
+    # sampled audit of the STAGED (not yet visible) snapshot: prove the
+    # files are readable with the expected schema before anything
+    # publishes — partition-pruned + LIMITed, a handful of rows, not a
+    # table scan
+    new_buckets = [r[2] for r in lineage_rows]
+    audited = (
+        spark.read.parquet(os.path.join(catalog.warehouse, data_snap))
+        .filter(F.col("conv_bucket").isin(new_buckets))
+        .select("conv_id", "turn_idx", "extracted_text", "error")
+        .limit(AUDIT_SAMPLE_ROWS)
+        .count()
     )
-    return {
-        "run_id": run_id,
-        "processed_buckets": n_new,
-        "skipped_buckets": len(committed),
-        "orphans_dropped": orphans,
-        "total_rows": totals.r if totals else 0,
-        "total_failures": totals.f if totals else 0,
-    }
+    if audited == 0:
+        catalog.discard_staged(data_snap)
+        raise RuntimeError(
+            f"write audit failed: {len(lineage_rows)} buckets staged but the "
+            f"staged output has no readable rows; nothing published"
+        )
+    lineage_snap = catalog.stage_append(
+        spark.createDataFrame(lineage_rows, LINEAGE_SCHEMA), lineage_table
+    )
+    catalog.commit({output_table: data_snap, lineage_table: lineage_snap})
+    summary["processed_buckets"] = len(lineage_rows)
+    summary["total_rows"] += sum(r[3] for r in lineage_rows)
+    summary["total_failures"] += sum(r[5] for r in lineage_rows)
+    return summary

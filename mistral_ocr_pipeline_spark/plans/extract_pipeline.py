@@ -12,7 +12,10 @@ Design points, per the north rule:
   turn is independent (the reference re-sorts after unordered completion,
   main.py:203-209, so per-turn parallelism is semantics-preserving), and
   the shuffle key is ``(conv_id, salt(turn_idx))`` so one 10⁶-turn
-  conversation spreads across up to ``n_salts`` tasks.
+  conversation spreads across up to ``N_SALTS`` tasks.
+* **No tuning knobs on the extract path** — the shuffle width is
+  ``spark.sql.shuffle.partitions`` + AQE (set per cluster with ``--conf``),
+  the salt count and the per-slice payload budget are fixed constants.
 * **Stable turn ordering** is restored only where an order-sensitive
   derivation needs it (W6): ``with_stable_order`` and
   ``assemble_conversations`` window/sort on ``(conv_id, turn_idx)``.
@@ -52,23 +55,22 @@ EXTRACT_OUTPUT_SCHEMA = T.StructType(
     ]
 )
 
-DEFAULT_N_SALTS = 64
+# fixed: the exchange WIDTH comes from spark.sql.shuffle.partitions + AQE
+# (cluster --conf); the salt only bounds how many tasks one hot
+# conversation may fan out over
+N_SALTS = 64
 
 
-def salted_repartition(
-    df: DataFrame, num_partitions: int | None = None, n_salts: int = DEFAULT_N_SALTS
-) -> DataFrame:
+def salted_repartition(df: DataFrame) -> DataFrame:
     """Hash-repartition on ``(conv_id, salt)`` with ``salt =
-    pmod(hash(turn_idx), n_salts)``.
+    pmod(hash(turn_idx), N_SALTS)``.
 
     A Zipf-head conversation (FIXTURES.md skew profile: one conv = 50% of
-    turns) fans out over up to ``n_salts`` tasks instead of pinning one;
+    turns) fans out over up to ``N_SALTS`` tasks instead of pinning one;
     AQE skew handling is the runtime backstop.  At 100 TB the same key
     keeps related turns loosely co-located for downstream per-conv ops
     while bounding any single task's share of a hot conversation."""
-    salt = F.pmod(F.hash(F.col("turn_idx")), F.lit(n_salts))
-    if num_partitions:
-        return df.repartition(num_partitions, F.col("conv_id"), salt)
+    salt = F.pmod(F.hash(F.col("turn_idx")), F.lit(N_SALTS))
     return df.repartition(F.col("conv_id"), salt)
 
 
@@ -102,17 +104,11 @@ def _byte_bounded(pdf: pd.DataFrame, budget: int) -> Iterator[pd.DataFrame]:
         yield pdf.iloc[start:]
 
 
-def _make_extract_batches(budget: int):
-    """Kernel factory: the budget rides in the closure, so it serializes
-    with the UDF and reaches executor workers (a module-level constant
-    would be re-imported fresh there)."""
-
-    def _extract_batches(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for incoming in batches:
-            for piece in _byte_bounded(incoming, budget):
-                yield _extract_one(piece)
-
-    return _extract_batches
+def _extract_batches(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """The mapInPandas kernel: each Arrow batch, byte-bounded, extracted."""
+    for incoming in batches:
+        for piece in _byte_bounded(incoming, MAX_BATCH_PAYLOAD_BYTES):
+            yield _extract_one(piece)
 
 
 def _extract_one(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -151,13 +147,7 @@ def _extract_one(pdf: pd.DataFrame) -> pd.DataFrame:
     )
 
 
-def extract_transcripts(
-    df: DataFrame,
-    num_partitions: int | None = None,
-    n_salts: int = DEFAULT_N_SALTS,
-    repartition: bool | str = "auto",
-    max_batch_payload_bytes: int = MAX_BATCH_PAYLOAD_BYTES,
-) -> DataFrame:
+def extract_transcripts(df: DataFrame, repartition: bool | str = "auto") -> DataFrame:
     """transcripts(conv_id, turn_idx, role, text, tool, ts) → extraction table.
 
     ``repartition``:
@@ -172,6 +162,10 @@ def extract_transcripts(
       * ``True`` — always shuffle (explicitly skewed sources).
       * ``False`` — never shuffle.
 
+    The shuffle's width is ``spark.sql.shuffle.partitions`` (coalesced by
+    AQE); each incoming Arrow batch is extracted in slices of at most
+    ``MAX_BATCH_PAYLOAD_BYTES`` of payload.
+
     Null-handling: nulls are pinned to None before dispatch (Arrow delivers
     None for string nulls; NaN can appear via pandas paths)."""
     src = df.select("conv_id", "turn_idx", "role", "text", "tool", "ts")
@@ -179,10 +173,8 @@ def extract_transcripts(
         target = src.sparkSession.sparkContext.defaultParallelism
         repartition = src.rdd.getNumPartitions() < target
     if repartition:
-        src = salted_repartition(src, num_partitions, n_salts)
-    return src.mapInPandas(
-        _make_extract_batches(max_batch_payload_bytes), EXTRACT_OUTPUT_SCHEMA
-    )
+        src = salted_repartition(src)
+    return src.mapInPandas(_extract_batches, EXTRACT_OUTPUT_SCHEMA)
 
 
 def with_stable_order(df: DataFrame) -> DataFrame:

@@ -773,9 +773,10 @@ class TableCatalog:
         run it per partition/bucket at scale).
 
         Returns key columns (or all columns when keyless) + ``status``.
-        Snapshot ids are accepted in either form — bare ``snap-…`` (the
-        `read` convention) or the ``table/snap-…`` relpath
-        `current_tables()` returns.
+        A column only one snapshot has (ADD-COLUMN evolution) is compared
+        as NULL on the other side.  Snapshot ids are accepted in either
+        form — bare ``snap-…`` (the `read` convention) or the
+        ``table/snap-…`` relpath `current_tables()` returns.
         """
 
         def _snap(s: str) -> str:
@@ -789,6 +790,21 @@ class TableCatalog:
             if target_snapshot is not None
             else self.read(table, merge_schema=True)
         )
+        # ADD-COLUMN evolution between the snapshots: compare over the
+        # union of columns, the side lacking one reading it as typed NULL
+        types = {f.name: f.dataType for f in t.schema.fields}
+        for f in b.schema.fields:
+            types.setdefault(f.name, f.dataType)
+
+        def _widen(df: DataFrame) -> DataFrame:
+            return df.select(
+                *[
+                    F.col(c) if c in df.columns else F.lit(None).cast(dt).alias(c)
+                    for c, dt in types.items()
+                ]
+            )
+
+        b, t = _widen(b), _widen(t)
         if key_cols is None:
             cols = t.columns
             added = t.exceptAll(b.select(*cols)).select(

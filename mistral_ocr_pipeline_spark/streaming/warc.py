@@ -17,12 +17,56 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from mistral_ocr_pipeline_spark.plans.extract_pipeline import extract_transcripts
 from mistral_ocr_pipeline_spark.sources.catalog import TableCatalog
 from mistral_ocr_pipeline_spark.sources.warc import (
     cdx_index,
     parse_warc_records,
 )
 from mistral_ocr_pipeline_spark.streaming.identity import stream_identity
+
+
+def extract_pages(recs: DataFrame) -> DataFrame:
+    """Intact response records (``parse_warc_records(..., keep_body=True)``)
+    → pages(file_id, rec_idx, payload_kind, extracted_text, md, error,
+    target_uri): each HTTP payload runs the extractor as a one-turn
+    conversation.  The synthetic ``conv_id`` rides on the response rows and
+    the extraction joins back on it, so ``file_id`` keeps its own type and
+    value — a string id (a WARC filename, ``#`` included) is never parsed
+    back out of the key."""
+    resp = recs.filter(
+        (F.col("warc_type") == "response") & ~F.col("truncated")
+    ).select(
+        F.concat(
+            F.col("file_id").cast("string"),
+            F.lit("#"),
+            F.col("rec_idx").cast("string"),
+        ).alias("conv_id"),
+        "file_id",
+        "rec_idx",
+        "target_uri",
+        F.expr(
+            "CASE WHEN locate('\\r\\n\\r\\n', body) = 0 THEN body "
+            "ELSE substring(body, locate('\\r\\n\\r\\n', body) + 4) END"
+        ).alias("payload"),
+    )
+    t = resp.select(
+        "conv_id",
+        F.lit(0).cast("int").alias("turn_idx"),
+        F.lit("user").alias("role"),
+        F.col("payload").alias("text"),
+        F.lit(None).cast("string").alias("tool"),
+        F.lit(None).cast("timestamp").alias("ts"),
+    )
+    return (
+        extract_transcripts(t)
+        .select("conv_id", "payload_kind", "extracted_text", "md", "error")
+        .join(resp.select("conv_id", "file_id", "rec_idx", "target_uri"), "conv_id")
+        .select(
+            "file_id", "rec_idx", "payload_kind", "extracted_text", "md",
+            "error", "target_uri",
+        )
+    )
 
 
 def run_warc_ingest(
@@ -64,52 +108,9 @@ def run_warc_ingest(
             lineage_table: catalog.stage_append(lineage, lineage_table),
         }
         if extract:
-            from mistral_ocr_pipeline_spark.plans.extract_pipeline import (
-                extract_transcripts,
+            staged[pages_table] = catalog.stage_append(
+                extract_pages(recs), pages_table
             )
-
-            resp = recs.filter(
-                (F.col("warc_type") == "response") & ~F.col("truncated")
-            ).select(
-                "file_id",
-                "rec_idx",
-                "target_uri",
-                F.expr(
-                    "CASE WHEN locate('\\r\\n\\r\\n', body) = 0 THEN body "
-                    "ELSE substring(body, locate('\\r\\n\\r\\n', body) + 4)"
-                    " END"
-                ).alias("payload"),
-            )
-            t = resp.select(
-                F.concat(
-                    F.col("file_id").cast("string"),
-                    F.lit("#"),
-                    F.col("rec_idx").cast("string"),
-                ).alias("conv_id"),
-                F.lit(0).cast("int").alias("turn_idx"),
-                F.lit("user").alias("role"),
-                F.col("payload").alias("text"),
-                F.lit(None).cast("string").alias("tool"),
-                F.lit(None).cast("timestamp").alias("ts"),
-            )
-            pages = (
-                extract_transcripts(t)
-                .select(
-                    F.split(F.col("conv_id"), "#").getItem(0).cast("long")
-                    .alias("file_id"),
-                    F.split(F.col("conv_id"), "#").getItem(1).cast("int")
-                    .alias("rec_idx"),
-                    "payload_kind",
-                    "extracted_text",
-                    "md",
-                    "error",
-                )
-                .join(
-                    resp.select("file_id", "rec_idx", "target_uri"),
-                    ["file_id", "rec_idx"],
-                )
-            )
-            staged[pages_table] = catalog.stage_append(pages, pages_table)
         catalog.commit(staged)
 
     q = (

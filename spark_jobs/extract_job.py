@@ -6,6 +6,11 @@ lineage if a previous run was killed), writes output + per-partition
 lineage.  All engine code rides in the --py-files archive built by
 ``python tools/make_pyfiles.py``; only this thin driver file is submitted.
 
+The job has no parallelism flag: the extraction shuffle's width is
+``spark.sql.shuffle.partitions`` with AQE, set per cluster with ``--conf``
+as below.  A rerun over the same input is a no-op (``processed_buckets:
+0``) that reads only the lineage table.
+
 Example (multi-executor cluster):
   spark-submit \\
     --master yarn --deploy-mode cluster \\
@@ -32,8 +37,6 @@ def main() -> None:
     p.add_argument("--run-id", default="run-0")
     p.add_argument("--n-buckets", type=int, default=256,
                    help="conv_id bucket count (resume/commit granularity)")
-    p.add_argument("--num-partitions", type=int, default=None,
-                   help="extraction parallelism (default: cluster default)")
     args = p.parse_args()
 
     # on a cluster the session comes from spark-submit confs; builder here
@@ -46,12 +49,7 @@ def main() -> None:
     catalog = TableCatalog(spark, args.warehouse)
     input_df = spark.read.parquet(args.input)
     summary = run_extraction(
-        spark,
-        catalog,
-        input_df,
-        run_id=args.run_id,
-        n_buckets=args.n_buckets,
-        num_partitions=args.num_partitions,
+        spark, catalog, input_df, run_id=args.run_id, n_buckets=args.n_buckets
     )
     print(summary)
     spark.stop()

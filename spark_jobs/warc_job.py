@@ -87,48 +87,9 @@ def main() -> None:
     }
     n_pages = 0
     if args.extract:
-        from mistral_ocr_pipeline_spark.plans.extract_pipeline import (
-            extract_transcripts,
-        )
+        from mistral_ocr_pipeline_spark.streaming.warc import extract_pages
 
-        resp = recs.filter(
-            (F.col("warc_type") == "response") & ~F.col("truncated")
-        ).select(
-            "file_id",
-            "rec_idx",
-            "target_uri",
-            F.expr(
-                "CASE WHEN locate('\\r\\n\\r\\n', body) = 0 THEN body "
-                "ELSE substring(body, locate('\\r\\n\\r\\n', body) + 4) END"
-            ).alias("payload"),
-        )
-        t = resp.select(
-            F.concat(F.col("file_id").cast("string"), F.lit("#"),
-                     F.col("rec_idx").cast("string")).alias("conv_id"),
-            F.lit(0).cast("int").alias("turn_idx"),
-            F.lit("user").alias("role"),
-            F.col("payload").alias("text"),
-            F.lit(None).cast("string").alias("tool"),
-            F.lit(None).cast("timestamp").alias("ts"),
-        )
-        pages = (
-            extract_transcripts(t)
-            .select(
-                F.split(F.col("conv_id"), "#").getItem(0).cast("long")
-                .alias("file_id"),
-                F.split(F.col("conv_id"), "#").getItem(1).cast("int")
-                .alias("rec_idx"),
-                "payload_kind",
-                "extracted_text",
-                "md",
-                "error",
-            )
-            .join(
-                resp.select("file_id", "rec_idx", "target_uri"),
-                ["file_id", "rec_idx"],
-            )
-        )
-        pages = pages.localCheckpoint(eager=True)
+        pages = extract_pages(recs).localCheckpoint(eager=True)
         n_pages = pages.count()
         staged["pages"] = catalog.stage_append(pages, "pages")
     catalog.commit(staged)

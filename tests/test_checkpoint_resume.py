@@ -8,7 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from mistral_ocr_pipeline_spark.checkpoint.lineage import (
-    committed_buckets,
+    committed_lineage,
     run_extraction,
     with_conv_bucket,
 )
@@ -49,7 +49,7 @@ def test_kill_resume_equals_single_shot(spark, tmp_path, input_df):
         only_buckets=first_half,
     )
     assert s1["processed_buckets"] <= len(first_half)
-    committed_mid = committed_buckets(cat_b, "run_partitions")
+    committed_mid = set(committed_lineage(cat_b, "run_partitions"))
     assert committed_mid and committed_mid.issubset(first_half)
 
     # resume: must process only the remaining buckets
@@ -78,6 +78,8 @@ def test_kill_resume_equals_single_shot(spark, tmp_path, input_df):
     assert total == cat_b.read("extracted").count()
     failures = sum(r.failures for r in lineage)
     assert failures == cat_b.read("extracted").filter(F.col("error").isNotNull()).count()
+    # the resume's totals cover both runs' lineage rows, not just its own
+    assert (s2["total_rows"], s2["total_failures"]) == (total, failures)
 
 
 def test_orphan_bucket_dropped_before_resume(spark, tmp_path, input_df):
@@ -102,9 +104,10 @@ def test_orphan_bucket_dropped_before_resume(spark, tmp_path, input_df):
 
 def test_metrics_do_not_rescan_output(spark, tmp_path, input_df):
     """Lineage rows/bytes/failures come from observe() during the write —
-    with the sampled audit disabled, the output table must never be READ
-    (r01 re-scanned the whole output per run; at 100 TB that is a second
-    full pass).  Metrics must still be faithful."""
+    the output table must never be READ through the catalog (r01
+    re-scanned the whole output per run; at 100 TB that is a second full
+    pass; the sampled audit reads the staged files directly, LIMITed).
+    Metrics must still be faithful."""
     cat = TableCatalog(spark, str(tmp_path / "wh_e"))
     reads = []
     orig_read = cat.read
@@ -114,9 +117,7 @@ def test_metrics_do_not_rescan_output(spark, tmp_path, input_df):
         return orig_read(table)
 
     cat.read = spy_read
-    run_extraction(
-        spark, cat, input_df, run_id="r1", n_buckets=N_BUCKETS, audit_sample=0
-    )
+    run_extraction(spark, cat, input_df, run_id="r1", n_buckets=N_BUCKETS)
     assert "extracted" not in reads, reads
     cat.read = orig_read
     lineage = cat.read("run_partitions").collect()
@@ -138,11 +139,34 @@ def test_metrics_do_not_rescan_output(spark, tmp_path, input_df):
 
 
 def test_idempotent_rerun_noop(spark, tmp_path, input_df):
+    """A rerun over committed work reads the lineage table once and
+    builds no plan: no read of the output, nothing staged or discarded."""
     cat = TableCatalog(spark, str(tmp_path / "wh_d"))
-    run_extraction(spark, cat, input_df, run_id="r1", n_buckets=N_BUCKETS)
+    first = run_extraction(spark, cat, input_df, run_id="r1", n_buckets=N_BUCKETS)
     before = _sorted_rows(cat.read("extracted"))
+
+    calls = []
+
+    def spy(name):
+        orig = getattr(cat, name)
+
+        def wrapped(*args, **kwargs):
+            calls.append((name, args[0] if args else None))
+            return orig(*args, **kwargs)
+
+        setattr(cat, name, wrapped)
+
+    for name in ("read", "stage_append", "stage_overwrite", "discard_staged"):
+        spy(name)
     s = run_extraction(spark, cat, input_df, run_id="r2", n_buckets=N_BUCKETS)
+    assert calls == [("read", "run_partitions")], calls
     assert s["processed_buckets"] == 0
+    assert s["skipped_buckets"] == first["processed_buckets"]
+    assert (s["total_rows"], s["total_failures"]) == (
+        first["total_rows"], first["total_failures"]
+    )
+    for name in ("read", "stage_append", "stage_overwrite", "discard_staged"):
+        delattr(cat, name)
     assert _sorted_rows(cat.read("extracted")) == before
 
 
@@ -729,3 +753,29 @@ class TestDiffSnapshots:
         s1 = cat.current_tables()["t"]
         assert cat.diff_snapshots("t", s1, key_cols=["k"]).count() == 0
         assert cat.diff_snapshots("t", s1).count() == 0
+
+    def test_add_column_between_snapshots(self, spark, tmp_path):
+        """ADD-COLUMN evolution: the target carries a column the base
+        lacks; it diffs as NULL on the base side, keyed and keyless."""
+        from mistral_ocr_pipeline_spark.sources.catalog import TableCatalog
+
+        cat = TableCatalog(spark, str(tmp_path / "wh4"))
+        cat.append(
+            spark.createDataFrame([(1, "x"), (2, "y")], "k long, v string"), "t"
+        )
+        s1 = cat.current_tables()["t"]
+        cat.append(
+            spark.createDataFrame([(3, "z", 0.5)], "k long, v string, score double"),
+            "t",
+        )
+        keyed = {
+            r.k: r.status
+            for r in cat.diff_snapshots("t", s1, key_cols=["k"]).collect()
+        }
+        assert keyed == {3: "added"}
+        rows = {tuple(r) for r in cat.diff_snapshots("t", s1).collect()}
+        assert rows == {(3, "z", 0.5, "added")}
+        # the reverse direction: the column is missing from the TARGET
+        s2 = cat.current_tables()["t"]
+        back = cat.diff_snapshots("t", s2, target_snapshot=s1, key_cols=["k"])
+        assert {r.k: r.status for r in back.collect()} == {3: "removed"}

@@ -65,7 +65,7 @@ class TestGoldenEquality:
 
     def test_order_independence_of_salting(self, spark, unit_rows):
         """Salted repartition (shuffle) must not change any per-turn result."""
-        a = _spark_rows(spark, unit_rows, repartition=True, n_salts=8)
+        a = _spark_rows(spark, unit_rows, repartition=True)
         b = _spark_rows(spark, unit_rows, repartition=False)
         assert a == b
 
@@ -83,7 +83,7 @@ class TestConversationAssembly:
         shuffle arrival order (reference main.py:203-216 re-sort contract)."""
         rows = gen_transcripts(5, (3, 9), seed=13, profile="tiny")
         df = spark.createDataFrame(rows, schema=transcripts_schema())
-        ext = extract_transcripts(df, n_salts=4)
+        ext = extract_transcripts(df)
         conv = assemble_conversations(ext).orderBy("conv_id").collect()
 
         golden = {}
@@ -132,26 +132,22 @@ class TestByteBoundedRebatch:
             payload = s["text"].str.len().fillna(0).sum()
             assert payload <= 10_000_000 or len(s) == 1
 
-    def test_extraction_output_independent_of_budget(self, spark):
-        from pyspark.sql import functions as F
-
+    def test_extraction_output_independent_of_budget(self):
         from mistral_ocr_pipeline_spark.plans import extract_pipeline as ep
 
-        t = spark.createDataFrame(
-            [(f"c{i % 3}", i, "u", f"turn {i} text with words " * 20, None, None)
-             for i in range(50)],
-            "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
+        pdf = pd.DataFrame(
+            {
+                "conv_id": [f"c{i % 3}" for i in range(50)],
+                "turn_idx": list(range(50)),
+                "role": ["u"] * 50,
+                "text": [f"turn {i} text with words " * 20 for i in range(50)],
+                "tool": [None] * 50,
+                "ts": [None] * 50,
+            }
         )
-        big = {
-            (r.conv_id, r.turn_idx): r.extracted_text
-            for r in ep.extract_transcripts(t, repartition=False).collect()
-        }
-        # a 1000-byte budget forces many sub-batches INSIDE the executor
-        # workers (the budget travels in the UDF closure)
-        small = {
-            (r.conv_id, r.turn_idx): r.extracted_text
-            for r in ep.extract_transcripts(
-                t, repartition=False, max_batch_payload_bytes=1000
-            ).collect()
-        }
-        assert big == small and len(big) == 50
+        # a 1000-byte budget forces many slices; extracting them one by
+        # one must equal extracting the batch whole
+        slices = list(ep._byte_bounded(pdf, 1000))
+        assert len(slices) > 1
+        small = pd.concat([ep._extract_one(s) for s in slices], ignore_index=True)
+        pd.testing.assert_frame_equal(small, ep._extract_one(pdf))

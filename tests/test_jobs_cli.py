@@ -1,9 +1,9 @@
-"""Smoke test for the spark-submit job surface: one subprocess run of
-curation_job end to end (scrub → gate → dedup → split → UniMax → pack),
-asserting every output table published in the single atomic commit.
-One JVM spin-up (~40 s) — kept to a single invocation on the smallest
-scale for suite-time reasons; extract/neardup jobs share the same
-catalog publish path, which test_checkpoint_resume covers in-process."""
+"""Smoke tests for the spark-submit job surface, each job run by
+subprocess.  curation_job runs end to end (scrub → gate → dedup → split →
+UniMax → pack), asserting every output table published in the single
+atomic commit; the flagship extract_job runs once and then as its no-op
+rerun.  Every JVM spin-up costs ~40 s, so each job runs at the smallest
+scale for suite-time reasons."""
 
 import json
 import os
@@ -40,6 +40,53 @@ def test_curation_job_cli(tmp_path):
         "curated", "curation_rollup", "pack_assignment", "pack_stats",
         "unimax_plan", "unimax_stream",
     }
+
+
+def test_extract_job_cli(tmp_path, spark):
+    """The flagship checkpointed extraction through the spark-submit
+    surface: the first run commits every non-empty conv bucket, and a
+    rerun into the same warehouse is a no-op with the same totals."""
+    import ast
+
+    from mistral_ocr_pipeline_spark.checkpoint.lineage import with_conv_bucket
+    from mistral_ocr_pipeline_spark.fixtures.gen import (
+        gen_transcripts,
+        transcripts_schema,
+    )
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    inp = str(tmp_path / "transcripts.parquet")
+    df = spark.createDataFrame(
+        gen_transcripts(24, (2, 10), seed=5, profile="unit"),
+        schema=transcripts_schema(),
+    )
+    df.write.parquet(inp)
+    n_buckets = 8
+    nonempty = (
+        with_conv_bucket(df, n_buckets).select("conv_bucket").distinct().count()
+    )
+    wh = str(tmp_path / "wh_extract")
+
+    def run():
+        proc = subprocess.run(
+            [sys.executable, "spark_jobs/extract_job.py",
+             "--input", inp, "--warehouse", wh, "--run-id", "r",
+             "--n-buckets", str(n_buckets)],
+            cwd=root, env=dict(os.environ, PYTHONPATH=root),
+            capture_output=True, text=True, timeout=400,
+        )
+        assert proc.returncode == 0, proc.stderr[-2000:]
+        return ast.literal_eval(proc.stdout.strip().splitlines()[-1])
+
+    first = run()
+    assert first["processed_buckets"] == nonempty
+    assert first["skipped_buckets"] == 0
+    assert first["total_rows"] == df.count()
+    second = run()
+    assert second["processed_buckets"] == 0
+    assert second["skipped_buckets"] == nonempty
+    assert second["total_rows"] == first["total_rows"]
+    assert second["total_failures"] == first["total_failures"]
 
 
 def test_ann_index_job_cli(tmp_path):

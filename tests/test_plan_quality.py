@@ -64,8 +64,8 @@ class TestScanPruning:
 
 class TestJoinStrategies:
     def test_resume_anti_join_broadcasts(self, spark, docs):
-        # the J1 shape from checkpoint.lineage.run_extraction: committed
-        # bucket keys (one row per bucket) broadcast against the scan
+        # the J1 shape (`j1_resume_anti_join`): a small key set (one row
+        # per bucket) broadcast against the scan
         from mistral_ocr_pipeline_spark.checkpoint.lineage import with_conv_bucket
 
         src = with_conv_bucket(

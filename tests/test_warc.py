@@ -289,3 +289,34 @@ def test_cdx_offsets_point_at_record_starts(spark):
     for r in cdx_index(parse_warc_records(df)).collect():
         w = warc_by_file[r.file_id]
         assert w[r.offset : r.offset + 8] == "WARC/1.0", (r.file_id, r.offset)
+
+
+def test_extract_pages_keeps_string_file_id_with_hash(spark):
+    """A string file_id (a WARC filename, '#' included) comes back as
+    itself on every page: the extraction joins back on the synthetic
+    conv_id instead of parsing the id out of it."""
+    from mistral_ocr_pipeline_spark.streaming.warc import extract_pages
+
+    def page(i):
+        return _rec(
+            "response", f"https://h/{i}",
+            f"HTTP/1.1 200 OK{CRLF}{CRLF}<html><body><h1>T{i}</h1>"
+            f"<p>page body {i} words</p></body></html>",
+        )
+
+    files = [
+        ("crawl#00.warc", page(0) + _rec("request", "https://h/0", "GET /0") + page(1)),
+        ("crawl", page(2)),
+    ]
+    recs = parse_warc_records(
+        spark.createDataFrame(files, "file_id string, warc string"), keep_body=True
+    )
+    pages = sorted(
+        (r.file_id, r.rec_idx, r.target_uri, r.extracted_text[:2])
+        for r in extract_pages(recs).collect()
+    )
+    assert pages == [
+        ("crawl", 0, "https://h/2", "T2"),
+        ("crawl#00.warc", 0, "https://h/0", "T0"),
+        ("crawl#00.warc", 2, "https://h/1", "T1"),
+    ]
